@@ -6,18 +6,25 @@ degridding / ``predict_modelvis_image`` as stubs
 (``predict_modelvis_image.py:20-40``; SG:433 "still needs to be
 implemented"). This module completes the major-cycle loop Spark-first:
 
-- :func:`degrid_visibilities` — the adjoint of the explode-taps gridder:
-  each visibility reads back ``Σ_taps conv·G[cell] / Σ_taps conv`` via a
-  tap explosion + equi-join against the sparse grid + one per-row
-  aggregation. Shuffle = taps × rows joined against grid cells on the
-  cell key (broadcast when the grid is small); no UDF.
+- :func:`degrid_visibilities` — the adjoint of the gridder: each
+  visibility reads back ``Σ_taps conv·G[cell] / Σ_taps conv``. The
+  default ``variant="kernel"`` cogroups visibility slabs with the grid
+  cells of their halo window and gathers every row's taps in numpy
+  (``applyInArrow``); ``variant="explode"`` / ``precise=True`` is the
+  pure-Catalyst oracle form — a tap explosion + equi-join against the
+  sparse grid + one per-row aggregation.
 - :func:`predict_modelvis_image` — model image planes → forward FFT
   (exact inverse of ``image_from_grid``'s normalization) → degrid at the
-  given uv samples. CLEAN model images are sparse, so the plane UDF
-  emits only nonzero grid cells.
+  given uv samples. By default the FFT runs inside the kernel degrid's
+  slab function on the model's nonzero pixels, so no grid-sized
+  DataFrame is built; ``precise=True`` / ``variant="explode"`` runs the
+  two-step form (:func:`model_image_to_grid`'s nonzero grid cells, then
+  the explode degrid) that the DuckDB twin checks.
 """
 
 from __future__ import annotations
+
+import inspect
 
 import numpy as np
 import pandas as pd
@@ -33,7 +40,6 @@ from cngi_prototype_spark.imaging.grid import (
     _tap_explode,
     _tap_iu_iv,
 )
-from cngi_prototype_spark.imaging.kernels import pswf
 
 _BROADCAST_CELLS = 4_000_000
 
@@ -77,9 +83,11 @@ def degrid_visibilities(
     if precise:
         variant = "explode"
     if variant == "kernel":
-        return _degrid_kernel(vis_df, grid_df, gp, row_id=row_id, u=u,
-                              v=v, freq=freq, chan=chan, pol=pol,
-                              out=out, slab_w=slab_w,
+        return _degrid_kernel(vis_df, gp,
+                              lambda W, c, p: _cell_side(grid_df, gp, W,
+                                                         c, p),
+                              row_id=row_id, u=u, v=v, freq=freq,
+                              chan=chan, pol=pol, out=out, slab_w=slab_w,
                               salt_probe=salt_probe)
     u_pos, v_pos = _scaled_pos(gp, F.col(u), F.col(v), F.col(freq))
     geom = (vis_df
@@ -138,8 +146,8 @@ def degrid_visibilities(
 
 def _degrid_kernel(
     vis_df: DataFrame,
-    grid_df: DataFrame,
     gp: GridParms,
+    side,
     *,
     row_id: str,
     u: str,
@@ -149,10 +157,21 @@ def _degrid_kernel(
     pol: str,
     out: tuple[str, str],
     slab_w: int,
-    salt_probe: bool = False,
+    salt_probe: bool,
 ) -> DataFrame:
     """Dense-slab degrid (see :func:`degrid_visibilities`
-    ``variant="kernel"``).
+    ``variant="kernel"``; callers pass that function's resolved
+    arguments).
+
+    ``side(W, chan, pol)`` supplies the grid side of the cogroup:
+    ``(gsel, fill)`` — a DataFrame carrying the (chan, pol, ``_s``) slab
+    key, and ``fill(base, h, gtab) -> (h, n_v) complex`` that densifies
+    one slab (grid rows ``base .. base+h-1``) from a group's Arrow
+    table. :func:`_cell_side` reads sparse grid cells
+    (``degrid_visibilities``); :func:`_model_side` forward-FFTs model
+    pixels (``predict_modelvis_image``). Everything else — the slab
+    gather, the hot-slab valve, the payload passthrough and the
+    out-of-bounds NULL union — is shared.
 
     Scale shape: one cogroup shuffle keyed by (chan, pol, u-slab).
     The vis side partitions exactly (each row reads one slab ± the
@@ -199,7 +218,6 @@ def _degrid_kernel(
     """
     W = int(slab_w)
     half, support, ov = gp.half, gp.support, gp.oversampling
-    n_v = gp.n_v
     cgk = gp.kernel_1d()
     ius = np.arange(-half, support - half)
     didx = np.arange(256)
@@ -226,24 +244,12 @@ def _degrid_kernel(
     vis_cols = list(vis_df.columns)
     vsel = (geom.filter("_ok").drop("_ok")
             .withColumn("_s", (F.col("_u_c") / W).cast("int")))
-    gsel = (grid_df
-            .select(chan, pol, "u_idx", "v_idx", "grid_re", "grid_im",
-                    F.explode(F.sequence(
-                        F.floor((F.col("u_idx") - half) / W).cast("int"),
-                        F.floor((F.col("u_idx") + half) / W).cast("int")))
-                    .alias("_s"))
-            .filter(F.col("_s") >= 0))
+    gsel, fill = side(W, chan, pol)
 
     schema = T.StructType(
         [vis_df.schema[c] for c in vis_cols]
         + [T.StructField(out[0], T.DoubleType()),
            T.StructField(out[1], T.DoubleType())])
-
-    def _np(col, dtype):
-        # ChunkedArray -> numpy; the geometry columns are non-null by
-        # construction (in-bounds filter), so this never sees a mask
-        return col.to_numpy(zero_copy_only=False).astype(dtype,
-                                                         copy=False)
 
     def slab_fn(key: tuple, vtab, gtab):
         import pyarrow as pa
@@ -255,15 +261,7 @@ def _degrid_kernel(
                     .append_column(out[1], pa.array([], type=f64)))
         s = key[2].as_py() if hasattr(key[2], "as_py") else int(key[2])
         base = int(s) * W - half
-        h = W + 2 * half
-        plane = np.zeros((h, n_v), np.complex128)
-        if gtab.num_rows:
-            ui = _np(gtab.column("u_idx"), np.int64) - base
-            keep = (ui >= 0) & (ui < h)
-            plane[ui[keep],
-                  _np(gtab.column("v_idx"), np.int64)[keep]] = (
-                _np(gtab.column("grid_re"), np.float64)[keep]
-                + 1j * _np(gtab.column("grid_im"), np.float64)[keep])
+        plane = fill(base, W + 2 * half, gtab)
         uc = _np(vtab.column("_u_c"), np.int64)
         vc = _np(vtab.column("_v_c"), np.int64)
         fu = lut[_np(vtab.column("_du"), np.int64) + 128]  # (n, support)
@@ -339,6 +337,105 @@ def _degrid_kernel(
     return keyed.unionByName(oob)
 
 
+def _np(col, dtype):
+    """Arrow column -> numpy (a NULL double arrives as NaN, as in pandas;
+    the geometry and cell columns are non-null by construction)."""
+    return col.to_numpy(zero_copy_only=False).astype(dtype, copy=False)
+
+
+def _cell_side(grid_df: DataFrame, gp: GridParms, W: int, chan: str,
+               pol: str):
+    """Sparse grid cells as the cogroup's grid side: every cell is
+    replicated into each slab whose halo window holds it (≤ 1 +
+    ⌈2·half/W⌉ copies), and the fill places a group's cells into the
+    slab (absent cells read 0)."""
+    half, n_v = gp.half, gp.n_v
+    gsel = (grid_df
+            .select(chan, pol, "u_idx", "v_idx", "grid_re", "grid_im",
+                    F.explode(F.sequence(
+                        F.floor((F.col("u_idx") - half) / W).cast("int"),
+                        F.floor((F.col("u_idx") + half) / W).cast("int")))
+                    .alias("_s"))
+            .filter(F.col("_s") >= 0))
+
+    def fill(base: int, h: int, gtab) -> np.ndarray:
+        plane = np.zeros((h, n_v), np.complex128)
+        if gtab.num_rows:
+            ui = _np(gtab.column("u_idx"), np.int64) - base
+            keep = (ui >= 0) & (ui < h)
+            plane[ui[keep],
+                  _np(gtab.column("v_idx"), np.int64)[keep]] = (
+                _np(gtab.column("grid_re"), np.float64)[keep]
+                + 1j * _np(gtab.column("grid_im"), np.float64)[keep])
+        return plane
+
+    return gsel, fill
+
+
+def _model_side(image_df: DataFrame, gp: GridParms, W: int, chan: str,
+                pol: str, *, value: str = "model",
+                image_size: tuple[int, int] | None = None,
+                correct_pswf: bool = True):
+    """CLEAN-model pixels as the cogroup's grid side: the forward FFT of
+    :func:`model_image_to_grid` runs INSIDE the slab kernel, so no
+    grid-sized DataFrame exists.
+
+    Only pixels whose value is nonzero or NULL cross (a zero pixel adds
+    nothing; a NULL one must still poison its plane exactly as the
+    two-step path's NaN does). Each pixel is replicated once per slab
+    that can hold in-bounds visibilities (``_s`` in [half//W,
+    (n_u−half−1)//W]); the hot-slab valve adds one copy per extra
+    sub-bucket. The fill rebuilds the padded model plane, applies the
+    PSWF correction, runs ``np.fft`` over the whole plane and keeps the
+    slab's rows under the same ``|g| > 0`` cell rule and the same
+    ``re + 1j·im`` reconstruction the cell path applies — so every
+    model visibility is bit-identical to ``model_image_to_grid`` →
+    ``degrid_visibilities(variant="kernel")``.
+
+    FFT cost: one n_u×n_v FFT per plane per task of the cogroup stage
+    that holds any of the plane's groups — at most min(⌈n_u/W⌉ + the
+    plane's extra hot sub-buckets, tasks). A task's groups arrive
+    sorted by (chan, pol, slab), so the fill keeps the last plane's
+    transform and every further slab of that plane reuses it; a task
+    therefore holds one n_u×n_v complex plane besides its slab.
+    Measured on 4 cores (16 planes, 45k visibilities in 32 partitions,
+    slab_w=64): 2.1 s against 5.0 s for the two-step path at 512², and
+    3.1 s against 17.7 s at 1024²."""
+    n_u, n_v, half = gp.n_u, gp.n_v, gp.half
+    lo_u, lo_v = gp.crop_lo(image_size)
+    pix = (image_df
+           .select(chan, pol,
+                   (F.col("l_idx") + F.lit(lo_u)).alias("_l"),
+                   (F.col("m_idx") + F.lit(lo_v)).alias("_m"),
+                   F.col(value).cast("double").alias("_val"))
+           .filter(F.col("_val").isNull() | (F.col("_val") != 0)))
+    gsel = pix.withColumn("_s", F.explode(F.sequence(
+        F.lit(half // W), F.lit((n_u - half - 1) // W))))
+    last: dict = {}  # (chan, pol) -> that plane's uv grid, one entry
+
+    def fill(base: int, h: int, gtab) -> np.ndarray:
+        plane = np.zeros((h, n_v), np.complex128)
+        if not gtab.num_rows:
+            return plane
+        key = (gtab.column(chan)[0].as_py(), gtab.column(pol)[0].as_py())
+        if key not in last:
+            img = np.zeros((n_u, n_v))
+            img[_np(gtab.column("_l"), np.int64),
+                _np(gtab.column("_m"), np.int64)] = _np(gtab.column("_val"),
+                                                        np.float64)
+            if correct_pswf:
+                img = img * gp.pswf_corr()
+            last.clear()
+            last[key] = np.fft.fftshift(np.fft.fft2(np.fft.ifftshift(img)))
+        a0, a1 = max(0, base), min(n_u, base + h)
+        rows = last[key][a0:a1]
+        rows = np.where(np.abs(rows) > 0, rows, 0)
+        plane[a0 - base:a1 - base] = rows.real + 1j * rows.imag
+        return plane
+
+    return gsel, fill
+
+
 def _est_row_bytes(schema: T.StructType) -> int:
     """Conservative in-memory row-width estimate for the cogroup frame
     budget: fixed-width types at their natural width, variable-width
@@ -388,12 +485,19 @@ def model_image_to_grid(
     pol: str = "pol",
     value: str = "model",
     correct_pswf: bool = True,
+    image_size: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Forward transform of a model image into sparse uv-grid cells,
     physical DFT convention: a point source of flux f at the phase
     center produces model visibilities of amplitude f (no 1/Npad — the
-    inverse of ``image_from_grid`` at ``sum_weight = n_u·n_v``)."""
+    inverse of ``image_from_grid`` at ``sum_weight = n_u·n_v``).
+
+    ``image_size`` is the frame the ``(l_idx, m_idx)`` indices are in —
+    the cropped output of ``image_from_grid`` / ``make_image_and_psf``
+    (pixel (0, 0) sits at padded index ``n//2 − crop//2``). The default
+    is the full padded grid."""
     n_u, n_v = gp.n_u, gp.n_v
+    lo_u, lo_v = gp.crop_lo(image_size)
     schema = T.StructType([
         T.StructField(chan, T.IntegerType()),
         T.StructField(pol, T.IntegerType()),
@@ -405,13 +509,11 @@ def model_image_to_grid(
 
     def plane(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         img = np.zeros((n_u, n_v))
-        li = pdf["l_idx"].to_numpy(int)
-        mi = pdf["m_idx"].to_numpy(int)
+        li = pdf["l_idx"].to_numpy(int) + lo_u
+        mi = pdf["m_idx"].to_numpy(int) + lo_v
         img[li, mi] = pdf[value].to_numpy(float)
         if correct_pswf:
-            cu = pswf((np.arange(n_u) - n_u // 2) / (n_u // 2))[0]
-            cv = pswf((np.arange(n_v) - n_v // 2) / (n_v // 2))[0]
-            img = img * np.outer(cu, cv)
+            img = img * gp.pswf_corr()
         g = np.fft.fftshift(np.fft.fft2(np.fft.ifftshift(img)))
         ui, vi = np.nonzero(np.abs(g) > 0)
         return pd.DataFrame({
@@ -429,14 +531,41 @@ def predict_modelvis_image(
     image_df: DataFrame,
     vis_df: DataFrame,
     gp: GridParms,
+    *,
+    image_size: tuple[int, int] | None = None,
     **degrid_kwargs,
 ) -> DataFrame:
     """Model image → model visibilities at the input uv samples
-    (predict_modelvis_image.py surface, here actually implemented)."""
-    grid = model_image_to_grid(image_df, gp,
-                               chan=degrid_kwargs.get("chan", "chan"),
-                               pol=degrid_kwargs.get("pol", "pol"))
-    return degrid_visibilities(vis_df, grid, gp, **degrid_kwargs)
+    (predict_modelvis_image.py surface, here actually implemented).
+
+    ``image_size`` is the frame of the model's ``(l_idx, m_idx)`` (see
+    :func:`model_image_to_grid`; default: the full padded grid);
+    ``degrid_kwargs`` are :func:`degrid_visibilities`'s.
+
+    Production path (the default kernel variant): the visibility slabs
+    cogroup with the model's nonzero pixels and the forward FFT runs
+    inside the dense-slab kernel (:func:`_model_side`: one plane FFT
+    per task that holds the plane's slabs, reused across them), so the
+    all-cells model grid never becomes Spark rows; values are
+    bit-identical to the two-step path. ``precise=True`` or
+    ``variant="explode"`` runs the two-step path —
+    :func:`model_image_to_grid`, then :func:`degrid_visibilities` — the
+    form the DuckDB oracle twin checks."""
+    kw = inspect.signature(degrid_visibilities).bind(
+        vis_df, None, gp, **degrid_kwargs)
+    kw.apply_defaults()
+    kw = kw.arguments
+    chan, pol = kw["chan"], kw["pol"]
+    if kw["precise"] or kw["variant"] != "kernel":
+        grid = model_image_to_grid(image_df, gp, chan=chan, pol=pol,
+                                   image_size=image_size)
+        return degrid_visibilities(vis_df, grid, gp, **degrid_kwargs)
+    return _degrid_kernel(
+        vis_df, gp,
+        lambda W, c, p: _model_side(image_df, gp, W, c, p,
+                                    image_size=image_size),
+        **{k: kw[k] for k in ("row_id", "u", "v", "freq", "chan", "pol",
+                              "out", "slab_w", "salt_probe")})
 
 
 def sql_degrid(gp: GridParms, vis_sql: str, grid_sql: str,

@@ -21,12 +21,21 @@ Two physical strategies, same semantics:
    Whole-stage codegen keeps the kernel-weight arithmetic JVM-side.
 
 2. ``variant="kernel"`` — Arrow-batched ``mapInPandas``: a vectorized
-   numpy scatter (per-tap 1-D bincount loop; u-axis kernel factors
-   computed once per iu and reused across iv) builds *partial dense
-   grids per partition*, emitted as sparse nonzero cells and combined
-   by the same final ``groupBy`` sum. Preferred when ``support`` is
-   large (taps grow quadratically) or the touched-cell count per task
+   numpy scatter (rows sorted by (plane, cell), each row chunk's
+   support² taps added with one ``np.add.at``) builds *partial dense
+   grids per partition, one plane at a time*, emitted as the touched
+   cells and combined by the same final ``groupBy`` sum. Per plane the
+   work is O(rows·support² + n_u·n_v) — a plane with few taps in the
+   task sorts its tap cells instead — and the task holds the partition
+   plus one plane's arrays. Preferred when ``support`` is large
+   (taps grow quadratically) or the touched-cell count per task
    approaches the full grid, making the dense partial strictly smaller.
+   ``make_image_and_psf`` always runs on this scatter: one pass grids
+   the image, the PSF and both normalizers, the touched cells cross one
+   exchange (by plane) and the FFT kernel reads the summed cells, so the
+   uv grid never becomes a tap-exploded Spark row set.
+   ``make_image`` / ``make_psf`` / ``grid_visibilities`` run it with
+   ``variant="kernel"``; their default is the explode path above.
 
    With ``dense_planes=True`` (cube-imaging fast path, used by
    ``make_image(output="planes")``): rows group JVM-side into one fat
@@ -59,7 +68,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from cngi_prototype_spark.imaging.kernels import pswf_kernel_1d
+from cngi_prototype_spark.imaging.kernels import pswf, pswf_kernel_1d
 
 C_M_S = 299792458.0
 
@@ -94,6 +103,27 @@ class GridParms:
     def kernel_1d(self) -> np.ndarray:
         return pswf_kernel_1d(self.oversampling, self.support)
 
+    def crop_lo(self, image_size: tuple[int, int] | None = None
+                ) -> tuple[int, int]:
+        """Padded-grid index of pixel (0, 0) of an ``image_size`` image
+        (default: the whole padded grid): every image consumer slices the
+        centered window ``lo = n//2 − crop//2`` — the reference's
+        ``_remove_padding`` (ngcasa/imaging/_imaging_utils/
+        _remove_padding.py:20-32) — and every model reader places its
+        pixels there."""
+        crop = image_size or (self.n_u, self.n_v)
+        return self.n_u // 2 - crop[0] // 2, self.n_v // 2 - crop[1] // 2
+
+    def pswf_corr(self, image_size: tuple[int, int] | None = None
+                  ) -> np.ndarray:
+        """Separable PSWF gridding correction over the ``image_size``
+        window of the padded grid (default: the whole grid)."""
+        crop = image_size or (self.n_u, self.n_v)
+        (lo_u, lo_v), n_u, n_v = self.crop_lo(image_size), self.n_u, self.n_v
+        cu = pswf((np.arange(n_u) - n_u // 2) / (n_u // 2))[0]
+        cv = pswf((np.arange(n_v) - n_v // 2) / (n_v // 2))[0]
+        return np.outer(cu[lo_u:lo_u + crop[0]], cv[lo_v:lo_v + crop[1]])
+
 
 def _scaled_pos(gp: GridParms, u: Column, v: Column, freq: Column) -> tuple[Column, Column]:
     # SG:274-276 — uv in meters × (-freq·cell·n/c), shifted to grid center
@@ -108,7 +138,7 @@ def _prepare(df: DataFrame, gp: GridParms, u: str, v: str, freq: str,
     """Common per-visibility geometry: center cell, fractional-offset
     index, in-bounds + nonzero filters (SG:300-343). ``nonzero=False``
     skips the data-nonzero filter (the fused image+PSF path applies
-    its own per-aggregate masks instead — see ``with_psf``)."""
+    its own per-aggregate masks instead — see ``_image_psf_grid``)."""
     u_pos, v_pos = _scaled_pos(gp, F.col(u), F.col(v), F.col(freq))
     out = (
         df.withColumn("_u_c", F.floor(u_pos + F.lit(0.5)).cast("int"))
@@ -132,6 +162,73 @@ def _prepare(df: DataFrame, gp: GridParms, u: str, v: str, freq: str,
         F.col("_wd_re").isNotNull() & F.col("_wd_im").isNotNull()
         & ((F.col("_wd_re") != 0) | (F.col("_wd_im") != 0))
     )
+
+
+def _psf_masks(prepared: DataFrame, weight: str) -> DataFrame:
+    """Image+PSF row masks for one fused pass (``_image_psf_grid``):
+    keep every weight-valid row (make_psf's row set) and zero the data
+    terms of the data-invalid ones (make_image's row set is the subset
+    whose weighted data is non-null and nonzero). Every shipped column
+    is non-null, so NULL and NaN stay distinct on the Python side."""
+    data_ok = (F.col("_wd_re").isNotNull() & F.col("_wd_im").isNotNull()
+               & ((F.col("_wd_re") != 0) | (F.col("_wd_im") != 0)))
+    psf_ok = F.col(weight).isNotNull() & (F.col(weight) != 0)
+    return (
+        prepared
+        .withColumn("_data_ok", data_ok)
+        .filter(F.col("_data_ok") | psf_ok)
+        .withColumn("_wd_re", F.when(F.col("_data_ok"),
+                                     F.col("_wd_re")).otherwise(0.0))
+        .withColumn("_wd_im", F.when(F.col("_data_ok"),
+                                     F.col("_wd_im")).otherwise(0.0))
+        # masked weights: _w_img normalizes the image (data rows only,
+        # as the unfused image path does), _w_psf feeds the PSF terms +
+        # normalizer (every weight-valid row, as make_psf's re=None
+        # _prepare does)
+        .withColumn("_w_img", F.when(F.col("_data_ok"),
+                                     F.col(weight)).otherwise(0.0))
+        .withColumn("_w_psf", F.coalesce(F.col(weight), F.lit(0.0))))
+
+
+def _norm_lut(gp: GridParms, cgk: np.ndarray) -> list[float]:
+    """Per-axis kernel norm Σ_t cgk[|ov·t + off|] for every reachable
+    offset off ∈ [-(ov//2 + 1), ov//2 + 1], summed left to right (the
+    SQL twin's ``+`` chain). Reachable range: _du = floor((u_c −
+    u_pos)·ov + 0.5) with (u_c − u_pos) ∈ (−0.5, 0.5], so |_du| reaches
+    ov//2 + 1 when oversampling is odd; the extra cgk indices stay
+    inside the table (ov·half + ov//2 + 1 ≤ ov·(half+1) for ov ≥ 2)."""
+    half_ov = gp.oversampling // 2 + 1
+    norm_vals = []
+    for off in range(-half_ov, half_ov + 1):
+        terms = [float(cgk[i]) if (i := abs(gp.oversampling * t + off)) < len(cgk) else 0.0
+                 for t in range(-gp.half, gp.support - gp.half)]
+        acc = terms[0]
+        for x in terms[1:]:
+            acc = acc + x
+        norm_vals.append(acc)
+    return norm_vals
+
+
+def _image_psf_grid(df: DataFrame, gp: GridParms, *,
+                    u: str = "u", v: str = "v", freq: str = "freq",
+                    weight: str = "weight", re: str = "data_re",
+                    im: str = "data_im", chan: str = "chan",
+                    pol: str = "pol") -> DataFrame:
+    """The fused image + PSF grid of ``make_image_and_psf``: one row per
+    touched cell ``(chan, pol, u_idx, v_idx, grid_re, grid_im, psf_re,
+    _swc, _swpc)``, hash-partitioned by plane.
+
+    One kernel scatter grids the image, the weight-sampling PSF and
+    both normalizers (``_swc`` image, ``_swpc`` PSF: each task's plane
+    totals, carried on one of its cells, 0.0 elsewhere — the consumer
+    sums the column). The per-task cells are exchanged ONCE, by plane,
+    and summed per cell inside that partitioning, so a plane consumer
+    grouped by (chan, pol) needs no second exchange and receives at most
+    n_u·n_v rows per plane however many tasks gridded it."""
+    prepared = _psf_masks(
+        _prepare(df, gp, u, v, freq, weight, re, im, nonzero=False), weight)
+    return _kernel_variant(prepared, gp, gp.kernel_1d(), chan=chan,
+                           pol=pol, with_psf=True)
 
 
 # one-py4j-call array literals — shared with the ANN tier; see
@@ -178,7 +275,6 @@ def grid_visibilities(
     dense_planes: bool = False,
     salt_probe: bool = False,
     rows_hint: int | None = None,
-    with_psf: bool = False,
     fuse_sumw: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """Grid visibilities → ``(grid_df, sum_weight_df)``.
@@ -187,26 +283,13 @@ def grid_visibilities(
     grid_re, grid_im)``; sum_weight_df: ``(chan, pol, sum_weight)``.
     ``re=None`` grids the weights themselves (PSF mode, SG:62-67).
 
-    ``with_psf=True`` (explode variant) adds a ``psf_re`` column —
-    the weight-sampling grid — to the SAME aggregation, so a CLEAN
-    setup's image+PSF pair costs one gridding pass instead of two,
-    and ``sum_weight_df`` gains a ``sum_weight_psf`` column (the
-    PSF-mode normalizer). PSF semantics match a standalone
-    ``make_psf`` exactly, including rows whose weighted DATA is
-    zero/null but whose weight is valid: the fused path keeps every
-    weight-valid row and masks the data terms to 0.0 for the
-    data-invalid ones (the data row set is a subset of the weight
-    row set — null/zero weight zeroes the weighted data — so the
-    image aggregation sees only exact +0.0 extra terms).
-
     ``fuse_sumw=True`` (explode variant only) removes the standalone
     sum-of-weights subtree — the second full pass over the
     visibilities that callers consuming BOTH outputs otherwise pay:
     each row's normalizer term ``w·(nu·nv)`` rides the CENTER tap
     ((0, 0) is always in ``gp.taps()``) into the cell aggregation and
-    the grid keeps the per-cell partials as an extra ``_swc`` column
-    (``_swpc`` for the PSF normalizer under ``with_psf``) — the
-    dense-planes path's embedded ``sum_w_norm`` design. The per-plane
+    the grid keeps the per-cell partials as an extra ``_swc`` column —
+    the dense-planes path's embedded ``sum_w_norm`` design. The per-plane
     image kernels sum the partials in-plane, so there is no sumw
     broadcast join and no materialization barrier (an earlier
     ``localCheckpoint`` diamond variant measured 2-8x SLOWER than the
@@ -222,28 +305,7 @@ def grid_visibilities(
     pre-reduce) — last-ulp only, and every fused caller is a rows-only
     surface.
     """
-    psf_fused = with_psf and variant == "explode"
-    prepared = _prepare(df, gp, u, v, freq, weight, re, im,
-                        nonzero=not psf_fused)
-    if psf_fused:
-        data_ok = (F.col("_wd_re").isNotNull() & F.col("_wd_im").isNotNull()
-                   & ((F.col("_wd_re") != 0) | (F.col("_wd_im") != 0)))
-        psf_ok = F.col(weight).isNotNull() & (F.col(weight) != 0)
-        prepared = (
-            prepared
-            .withColumn("_data_ok", data_ok)
-            .filter(F.col("_data_ok") | psf_ok)
-            .withColumn("_wd_re", F.when(F.col("_data_ok"),
-                                         F.col("_wd_re")).otherwise(0.0))
-            .withColumn("_wd_im", F.when(F.col("_data_ok"),
-                                         F.col("_wd_im")).otherwise(0.0))
-            # masked weights: _w_img normalizes the image (data rows
-            # only, as the unfused image path does), _w_psf feeds the
-            # PSF terms + normalizer (every weight-valid row, as
-            # make_psf's re=None _prepare does)
-            .withColumn("_w_img", F.when(F.col("_data_ok"),
-                                         F.col(weight)).otherwise(0.0))
-            .withColumn("_w_psf", F.coalesce(F.col(weight), F.lit(0.0))))
+    prepared = _prepare(df, gp, u, v, freq, weight, re, im)
     cgk = gp.kernel_1d()
     cgk_lit = _flit_arr(cgk)
 
@@ -273,33 +335,16 @@ def grid_visibilities(
     # the geometry expressions out of whole-stage codegen, ~95 s); the
     # array-literal index stays fully in codegen (~4.6 s). LUT values
     # accumulate left-to-right in Python — bit-identical to both the
-    # previous Catalyst chain and the SQL twin's `+` chain. ---
-    # reachable offset range: _du = floor((u_c - u_pos)·ov + 0.5) with
-    # (u_c - u_pos) ∈ (-0.5, 0.5], so |_du| can reach ov//2 + 1 when
-    # oversampling is odd — size the LUT over the full reachable range
-    # (the extra cgk indices stay within the table: ov·half + ov//2 + 1
-    # ≤ ov·(half+1) for ov ≥ 2)
+    # previous Catalyst chain and the SQL twin's `+` chain (_norm_lut). ---
     half_ov = gp.oversampling // 2 + 1
-    norm_vals = []
-    for off in range(-half_ov, half_ov + 1):
-        terms = [float(cgk[i]) if (i := abs(gp.oversampling * t + off)) < len(cgk) else 0.0
-                 for t in range(-gp.half, gp.support - gp.half)]
-        acc = terms[0]
-        for x in terms[1:]:
-            acc = acc + x
-        norm_vals.append(acc)
-    norm_arr = _flit_arr(norm_vals)
+    norm_arr = _flit_arr(_norm_lut(gp, cgk))
     nu = F.element_at(norm_arr, F.col("_du") + F.lit(half_ov + 1))
     nv = F.element_at(norm_arr, F.col("_dv") + F.lit(half_ov + 1))
-    w_img = F.col("_w_img") if psf_fused else F.col(weight)
     if precise:
         # gate mode: per-row quantized terms, row order can't matter —
         # the SQL twin mirrors this association exactly
-        sw_aggs = [agg(w_img * (nu * nv)).alias("sum_weight")]
-        if psf_fused:
-            sw_aggs.append(agg(F.col("_w_psf") * (nu * nv))
-                           .alias("sum_weight_psf"))
-        sum_weight = prepared.groupBy(chan, pol).agg(*sw_aggs)
+        sum_weight = prepared.groupBy(chan, pol).agg(
+            agg(F.col(weight) * (nu * nv)).alias("sum_weight"))
     else:
         # production mode: pre-reduce by the LUT key first. There are
         # at most (oversampling+1)^2 distinct (du, dv) pairs per plane,
@@ -309,20 +354,14 @@ def grid_visibilities(
         # the codegen size limit when the uv exprs are large; the
         # interpreted fallback rebuilds the 101-element array literal
         # per row — measured 95 s vs 5 s on the skewed CHILES tier.)
-        pre_aggs = [F.sum(w_img).alias("_w")]
-        fin_aggs = [F.sum(F.col("_w") * (nu * nv)).alias("sum_weight")]
-        if psf_fused:
-            pre_aggs.append(F.sum(F.col("_w_psf")).alias("_wp"))
-            fin_aggs.append(F.sum(F.col("_wp") * (nu * nv))
-                            .alias("sum_weight_psf"))
-        pre = (prepared.groupBy(chan, pol, "_du", "_dv").agg(*pre_aggs))
-        sum_weight = pre.groupBy(chan, pol).agg(*fin_aggs)
+        pre = (prepared.groupBy(chan, pol, "_du", "_dv")
+               .agg(F.sum(weight).alias("_w")))
+        sum_weight = pre.groupBy(chan, pol).agg(
+            F.sum(F.col("_w") * (nu * nv)).alias("sum_weight"))
 
     if variant == "explode":
         sel = [chan, pol, "_u_c", "_v_c", "_du", "_dv", "_wd_re",
                "_wd_im"]
-        if with_psf:
-            sel.append("_w_psf")
         if fuse_sumw:
             # only the RAW weight column rides the explode; the
             # normalizer term is evaluated inside the aggregate input
@@ -332,7 +371,7 @@ def grid_visibilities(
             # pushes it past the codegen threshold — the interpreted
             # fallback rebuilds the norm array literal per row
             # (measured 2.3 s -> 38.7 s on dirty_image at sf0.1).
-            sel.append("_w_img" if psf_fused else weight)
+            sel.append(weight)
         # tap indices from ONE exploded sequence (r15; was a literal
         # array of support² structs — ~3·support² py4j calls per query
         # build): same enumeration order as gp.taps(), two int ops per
@@ -347,8 +386,6 @@ def grid_visibilities(
         )
         aggs = [agg(conv * F.col("_wd_re")).alias("grid_re"),
                 agg(conv * F.col("_wd_im")).alias("grid_im")]
-        if with_psf:
-            aggs.append(agg(conv * F.col("_w_psf")).alias("psf_re"))
         if fuse_sumw:
             # normalizer terms on the CENTER tap only, evaluated in the
             # aggregate input where conv's array indexing is already in
@@ -357,15 +394,10 @@ def grid_visibilities(
             # quanta the standalone branch would sum flow through both
             # aggregation levels
             center = (F.col("_tiu") == 0) & (F.col("_tiv") == 0)
-            swt = (F.col("_w_img") if psf_fused else F.col(weight)) * (nu * nv)
-            swpt = F.col("_w_psf") * (nu * nv) if psf_fused else None
+            swt = F.col(weight) * (nu * nv)
             if precise:
                 swt = F.floor(swt * F.lit(1.0e9)).cast("long")
-                if swpt is not None:
-                    swpt = F.floor(swpt * F.lit(1.0e9)).cast("long")
             aggs.append(F.sum(F.when(center, swt)).alias("_swc"))
-            if psf_fused:
-                aggs.append(F.sum(F.when(center, swpt)).alias("_swpc"))
         grid = (
             e.groupBy(
                 chan, pol,
@@ -386,21 +418,13 @@ def grid_visibilities(
             # past 2^53).
             zero = F.lit(0).cast("long") if precise else F.lit(0.0)
             grid = grid.withColumn("_swc", F.coalesce("_swc", zero))
-            if psf_fused:
-                grid = grid.withColumn("_swpc", F.coalesce("_swpc", zero))
-
-            def _plane(col: str) -> Column:
-                return (F.sum(col) / F.lit(1.0e9)) if precise else F.sum(col)
-
             # back-compat/parity surface: the rollup of the embedded
             # partials. Callers consuming BOTH outputs separately would
             # re-run the gridding subtree once for it — the fused
-            # consumers (make_image / make_psf / make_image_and_psf)
-            # read only the grid and normalize from _swc in-plane.
-            sw_cols = [_plane("_swc").alias("sum_weight")]
-            if psf_fused:
-                sw_cols.append(_plane("_swpc").alias("sum_weight_psf"))
-            sum_weight = grid.groupBy(chan, pol).agg(*sw_cols)
+            # consumers (make_image / make_psf) read only the grid and
+            # normalize from _swc in-plane.
+            plane = (F.sum("_swc") / F.lit(1.0e9)) if precise else F.sum("_swc")
+            sum_weight = grid.groupBy(chan, pol).agg(plane.alias("sum_weight"))
         return grid, sum_weight
 
     if variant == "kernel":
@@ -727,21 +751,50 @@ def _kernel_variant(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
                     dense_planes: bool = False,
                     wn_col: Column | None = None,
                     salt_probe: bool = False,
-                    rows_hint: int | None = None) -> DataFrame:
+                    rows_hint: int | None = None,
+                    with_psf: bool = False) -> DataFrame:
     """Partial dense grid per partition via vectorized numpy scatter-add;
-    sparse nonzero cells out, final combine by groupBy sum — the
-    reference's per-chunk grid + tree-sum (SG:58-120) with Spark's
-    partial/final aggregation as the tree.
+    touched cells out, final combine by groupBy sum — the reference's
+    per-chunk grid + tree-sum (SG:58-120) with Spark's partial/final
+    aggregation as the tree.
+
+    Production scatter: a task reads its partition's geometry columns
+    into numpy once, sorts the rows by (plane, cell) and grids ONE plane
+    at a time — support² taps per row chunk through one ``np.add.at``
+    into a plane zeroed once — then emits that plane's touched cells
+    before the next plane starts. Per plane the work is
+    O(rows·support² + n_u·n_v). A plane with fewer than n_u·n_v/16 taps
+    in the task skips the dense arrays instead (its tap cells are
+    sorted and summed with ``bincount``, O(taps·log taps), the same
+    sums bit for bit): time-sliced partitions hold a little of every
+    channel, and on a large grid zeroing and scanning n_u·n_v per
+    (task, plane) would dominate (1024², 360k visibilities in 32
+    partitions, 4 cores: 13.7–17.1 s dense-only against 12.8–12.9 s,
+    parent explode 12.0–14.1 s). Task memory is the partition's
+    columns plus one plane's arrays; emitted rows are at most the
+    touched cells per task.
+
+    ``with_psf`` (the fused image + PSF pass, :func:`_image_psf_grid`)
+    also scatters the masked PSF weights (``_w_psf``) with the same taps
+    into a ``psf_re`` column and adds the image / PSF normalizers
+    Σ w·(nu·nv) over ``_w_img`` / ``_w_psf`` as ``_swc`` / ``_swpc``:
+    each task's plane totals, carried on the plane's first emitted cell
+    (0.0 on the others). Its cells cross ONE exchange, hash-partitioned
+    by plane, and the cell sum runs inside that partitioning, so a
+    (chan, pol)-grouped consumer plans no second exchange.
 
     ``precise`` quantizes each per-tap term with floor(x·1e9) and
     accumulates BIGINT partial grids — integer addition is associative,
     so the partition split cannot shift the result and the output is
     bit-equal to the explode variant's precise path (same oracle twin).
-    A touch-count grid makes zero-sum touched cells emit rows exactly
-    like a groupBy over exploded taps would."""
+    A touch mask (touch-count grid in precise mode) makes zero-sum
+    touched cells emit rows exactly like a groupBy over exploded taps
+    would."""
     import pyspark.sql.types as T
 
     val_t = T.LongType() if precise else T.DoubleType()
+    # the fused image + PSF pass's extra per-cell columns
+    psf_cols = ["psf_re", "_swc", "_swpc"] if with_psf else []
     out_schema = T.StructType([
         T.StructField(chan, T.IntegerType()),
         T.StructField(pol, T.IntegerType()),
@@ -749,7 +802,7 @@ def _kernel_variant(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
         T.StructField("v_idx", T.IntegerType()),
         T.StructField("grid_re", val_t),
         T.StructField("grid_im", val_t),
-    ])
+    ] + [T.StructField(c, T.DoubleType()) for c in psf_cols])
     n_u, n_v, ov, half, support = gp.n_u, gp.n_v, gp.oversampling, gp.half, gp.support
     cgk_arr = cgk  # closure capture; broadcast with the task closure
     dense_salt = 1
@@ -758,93 +811,134 @@ def _kernel_variant(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
         dense_salt = max(1, -(-4 * _p // max(1, int(n_planes))))
     slab_w = -(-n_u // dense_salt)
     cols = [chan, pol, "_u_c", "_v_c", "_du", "_dv", "_wd_re", "_wd_im"]
+    cols += ["_w_psf", "_w_img"] if with_psf else []
+    # (offset, tap) kernel-factor LUT over the reachable fractional
+    # offsets, the support² flat tap offsets of a (·, n_v) plane
+    # (iu-major, gp.taps() order), and the per-axis norm LUT
+    ius = np.arange(-half, support - half)
+    half_ov = ov // 2 + 1
+    raw = np.abs(ov * ius[None, :] + np.arange(-half_ov, half_ov + 1)[:, None])
+    tap_lut = np.where(raw < len(cgk), cgk[np.minimum(raw, len(cgk) - 1)], 0.0)
+    tap_off = (ius[:, None] * n_v + ius[None, :]).ravel()
+    norm_lut = np.asarray(_norm_lut(gp, cgk)) if with_psf else None
+    chunk = 1024  # rows per add.at: (chunk, support²) temporaries stay in cache
 
-    def _scatter(uu, vv, duu, dvv, wre, wim, h, want_touched=False):
-        # per-tap 1-D loop: the u-axis kernel factor (and its product
-        # with the weighted data) is computed ONCE per iu and reused
-        # across the iv taps — half the gathers of the 2-D
-        # (rows x taps) form, and every temporary is a cache-resident
-        # 1-D array; scatter target is (h, n_v) flattened
-        fre = np.zeros(h * n_v)
-        fim = np.zeros(h * n_v)
-        # touched-cell mask (sparse emission parity with the explode
-        # variant, which emits a 0.0 row for taps that exactly cancel);
-        # a plain boolean store per tap, far cheaper than a 3rd bincount
-        tou = np.zeros(h * n_v, bool) if want_touched else None
-        idx_base = uu * n_v + vv
-        for iu in range(-half, support - half):
-            cu = cgk_arr[np.abs(ov * iu + duu)]
-            cur, cui = cu * wre, cu * wim
-            base_u = idx_base + iu * n_v
-            for iv in range(-half, support - half):
-                cv = cgk_arr[np.abs(ov * iv + dvv)]
-                idx = base_u + iv
-                fre += np.bincount(idx, cv * cur, minlength=h * n_v)
-                fim += np.bincount(idx, cv * cui, minlength=h * n_v)
-                if tou is not None:
-                    tou[idx] = True
-        return fre, fim, tou
+    def _scatter(uu, vv, duu, dvv, wre, wim, h, w_psf=None,
+                 want_touched=False):
+        # one flattened (h, n_v) plane per quantity, zeroed once; each
+        # row chunk's support² tap values land with ONE add.at per
+        # quantity (no per-tap O(plane) bincount result to zero)
+        m = h * n_v
+        g = np.zeros(m, np.complex128)
+        p = np.zeros(m) if w_psf is not None else None
+        tou = np.zeros(m, bool) if want_touched else None
+        base = uu.astype(np.int64) * n_v + vv
+        fu, fv = tap_lut[duu + half_ov], tap_lut[dvv + half_ov]
+        vals = np.empty((chunk, support * support), np.complex128)
+        for a in range(0, len(base), chunk):
+            b = min(len(base), a + chunk)
+            conv = (fu[a:b, :, None] * fv[a:b, None, :]).reshape(b - a, -1)
+            idx = (base[a:b, None] + tap_off[None, :]).ravel()
+            v = vals[:b - a]
+            np.multiply(conv, wre[a:b, None], out=v.real)
+            np.multiply(conv, wim[a:b, None], out=v.imag)
+            np.add.at(g, idx, v.ravel())
+            if p is not None:
+                np.add.at(p, idx, (conv * w_psf[a:b, None]).ravel())
+            if tou is not None:
+                tou[idx] = True
+        return g, p, tou
+
+    def _cells(uu, vv, duu, dvv, wre, wim, w_psf=None):
+        # one plane's touched cells (flat u·n_v + v) and their tap sums.
+        # Few taps (< n_u·n_v/16): sort the tap cells and bincount into
+        # them, O(taps·log taps) with no plane-sized array; otherwise
+        # the dense scatter, O(taps + n_u·n_v). Both add a cell's taps
+        # in row order, so the sums are bit-identical either way.
+        if len(uu) * support * support * 16 >= n_u * n_v:
+            g, p, tou = _scatter(uu, vv, duu, dvv, wre, wim, n_u,
+                                 w_psf=w_psf, want_touched=True)
+            flat = np.flatnonzero(tou)
+            return (flat, g.real[flat], g.imag[flat],
+                    None if p is None else p[flat])
+        conv = (tap_lut[duu + half_ov][:, :, None]
+                * tap_lut[dvv + half_ov][:, None, :]).reshape(len(uu), -1)
+        flat, inv = np.unique(
+            ((uu * n_v + vv)[:, None] + tap_off[None, :]).ravel(),
+            return_inverse=True)
+
+        def tap_sum(w):
+            return np.bincount(inv, (conv * w[:, None]).ravel(), len(flat))
+
+        return (flat, tap_sum(wre), tap_sum(wim),
+                None if w_psf is None else tap_sum(w_psf))
+
+    def _partition(batches):
+        # the partition's columns as numpy arrays — one copy per column,
+        # no pandas concat of the whole partition
+        parts: dict[str, list] = {c: [] for c in cols}
+        for pdf in batches:
+            if len(pdf):
+                for c in cols:
+                    parts[c].append(pdf[c].to_numpy())
+        if not parts[chan]:
+            return None
+        return {c: np.concatenate(v) for c, v in parts.items()}
 
     def grid_batches(batches):
         if precise:
             yield from _precise_batches(batches)
             return
-        # production path: ONE pass over the whole partition. Arrow
-        # hands ~10k-row batches; concatenating first lets every
-        # bincount call scatter tens of millions of updates, so the
-        # O(grid) zeroing of the bincount result is amortized to noise
-        # (per-batch bincounts spend more time zeroing than adding).
-        pdfs = [p for p in batches if len(p)]
-        if not pdfs:
+        a = _partition(batches)
+        if a is None:
             return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        key = (pdf[chan].to_numpy(np.int64) * 1_000_000
-               + pdf[pol].to_numpy(np.int64))
-        u_c = pdf["_u_c"].to_numpy(np.int64)
-        v_c = pdf["_v_c"].to_numpy(np.int64)
-        du = pdf["_du"].to_numpy(np.int64)
-        dv = pdf["_dv"].to_numpy(np.int64)
-        w_re = pdf["_wd_re"].to_numpy(np.float64)
-        w_im = pdf["_wd_im"].to_numpy(np.float64)
-        rows = []
-        for k in np.unique(key):
-            sel = key == k
-            # sort by cell: quasi-sequential scatter targets keep the
-            # bincount adds cache-resident (~1.5x)
-            order = np.argsort(u_c[sel] * n_v + v_c[sel], kind="stable")
-            uu, vv = u_c[sel][order], v_c[sel][order]
-            duu, dvv = du[sel][order], dv[sel][order]
-            wre, wim = w_re[sel][order], w_im[sel][order]
+        key = (a[chan].astype(np.int64) * 1_000_000
+               + a[pol].astype(np.int64))
+        planes, plane_of = np.unique(key, return_inverse=True)
+        # ONE sort by (plane, cell): planes become contiguous runs and
+        # the scatter targets quasi-sequential (cache-resident adds)
+        cell = a["_u_c"].astype(np.int64) * n_v + a["_v_c"]
+        order = np.argsort(plane_of * (n_u * n_v) + cell, kind="stable")
+        bounds = np.searchsorted(plane_of[order], np.arange(len(planes) + 1))
+        for i, k in enumerate(planes):
+            sel = order[bounds[i]:bounds[i + 1]]
+            uu, vv = a["_u_c"][sel].astype(np.int64), a["_v_c"][sel]
+            duu = a["_du"][sel].astype(np.int64)
+            dvv = a["_dv"][sel].astype(np.int64)
+            wre, wim = a["_wd_re"][sel], a["_wd_im"][sel]
+            c_id, p_id = np.int32(k // 1_000_000), np.int32(k % 1_000_000)
             if dense_planes:
                 # slab-local scatter; one array row per (plane, slab)
                 slab_ids = uu // slab_w
                 for sl in np.unique(slab_ids):
                     sm = slab_ids == sl
                     u0 = int(sl) * slab_w - half
-                    h = slab_w + 2 * half
-                    sre, sim, _ = _scatter(uu[sm] - u0, vv[sm], duu[sm],
-                                           dvv[sm], wre[sm], wim[sm], h)
-                    rows.append(pd.DataFrame({
-                        chan: [np.int32(k // 1_000_000)],
-                        pol: [np.int32(k % 1_000_000)],
-                        "u0": [np.int32(u0)],
-                        "grid_re": [sre], "grid_im": [sim],
-                    }))
+                    g, _, _ = _scatter(uu[sm] - u0, vv[sm], duu[sm],
+                                          dvv[sm], wre[sm], wim[sm],
+                                          slab_w + 2 * half)
+                    yield pd.DataFrame({
+                        chan: [c_id], pol: [p_id], "u0": [np.int32(u0)],
+                        "grid_re": [np.ascontiguousarray(g.real)],
+                        "grid_im": [np.ascontiguousarray(g.imag)],
+                    })
                 continue
-            fre, fim, tou = _scatter(uu, vv, duu, dvv, wre, wim, n_u,
-                                     want_touched=True)
-            flat = np.nonzero(tou)[0]
-            ui, vi = flat // n_v, flat % n_v
-            rows.append(pd.DataFrame({
-                chan: np.full(len(ui), k // 1_000_000, np.int32),
-                pol: np.full(len(ui), k % 1_000_000, np.int32),
-                "u_idx": ui.astype(np.int32),
-                "v_idx": vi.astype(np.int32),
-                "grid_re": fre[flat],
-                "grid_im": fim[flat],
-            }))
-        if rows:
-            yield pd.concat(rows, ignore_index=True)
+            w_psf = a["_w_psf"][sel] if with_psf else None
+            flat, g_re, g_im, p = _cells(uu, vv, duu, dvv, wre, wim, w_psf)
+            vals = {"grid_re": g_re, "grid_im": g_im}
+            if with_psf:
+                vals["psf_re"] = p
+                # normalizers Σ w·(nu·nv): the task's plane totals,
+                # on the first emitted cell
+                nrm = norm_lut[duu + half_ov] * norm_lut[dvv + half_ov]
+                for c, w in (("_swc", a["_w_img"][sel]), ("_swpc", w_psf)):
+                    vals[c] = np.zeros(len(flat))
+                    vals[c][0] = (w * nrm).sum()
+            yield pd.DataFrame({
+                chan: np.full(len(flat), c_id, np.int32),
+                pol: np.full(len(flat), p_id, np.int32),
+                "u_idx": (flat // n_v).astype(np.int32),
+                "v_idx": (flat % n_v).astype(np.int32),
+                **vals})
 
     def _precise_batches(batches):
         # gate path: quantized int64 partials, accumulated across
@@ -918,8 +1012,8 @@ def _kernel_variant(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
         if n_planes:
             # salt by CONTIGUOUS u-range, not hash: each (plane, slab)
             # scatters into a slab-sized array (L2-resident) instead of
-            # the full grid, so the per-tap bincount zeroing is bounded
-            # by the slab and emitted partials stay small
+            # the full grid, so the per-plane zeroing is bounded by the
+            # slab and emitted partials stay small
             spark = prepared.sparkSession
             p = int(spark.conf.get("spark.sql.shuffle.partitions"))
             salt = F.floor(F.col("_u_c") / F.lit(slab_w))
@@ -942,10 +1036,15 @@ def _kernel_variant(prepared: DataFrame, gp: GridParms, cgk: np.ndarray,
         src = src.repartition(
             p, chan, pol, F.pmod(F.xxhash64("_u_c", "_v_c"), F.lit(salt_n)))
     partials = src.mapInPandas(grid_batches, out_schema)
+    if with_psf:
+        # the per-task cells shuffle once, by plane: the cell sum below
+        # (partial + final aggregate on the same side of the exchange)
+        # and the plane consumer both reuse this partitioning
+        partials = partials.repartition(chan, pol)
     fin = (lambda c: F.sum(c) / F.lit(1.0e9)) if precise else F.sum
     return partials.groupBy(chan, pol, "u_idx", "v_idx").agg(
-        fin(F.col("grid_re")).alias("grid_re"),
-        fin(F.col("grid_im")).alias("grid_im"))
+        *[fin(F.col(c)).alias(c) for c in ["grid_re", "grid_im"]],
+        *[F.sum(c).alias(c) for c in psf_cols])
 
 
 # ---------------------------------------------------------------------------

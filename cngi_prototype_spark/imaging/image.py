@@ -31,8 +31,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cngi_prototype_spark.imaging.grid import GridParms, grid_visibilities
-from cngi_prototype_spark.imaging.kernels import airy_disk, pswf
+from cngi_prototype_spark.imaging.grid import (
+    GridParms,
+    grid_visibilities,
+    _image_psf_grid,
+)
+from cngi_prototype_spark.imaging.kernels import airy_disk
 
 C_M_S = 299792458.0
 
@@ -101,7 +105,7 @@ def image_from_grid(
         g[pdf["u_idx"].to_numpy(int), pdf["v_idx"].to_numpy(int)] = (
             pdf["grid_re"].to_numpy(float) + 1j * pdf["grid_im"].to_numpy(float))
         img = np.fft.fftshift(np.fft.ifft2(np.fft.ifftshift(g)))
-        lo_u, lo_v = n_u // 2 - crop[0] // 2, n_v // 2 - crop[1] // 2
+        lo_u, lo_v = gp.crop_lo(image_size)
         img = img[lo_u:lo_u + crop[0], lo_v:lo_v + crop[1]].real * (n_u * n_v)
         if embedded_sw:
             sw = _embedded_sumw(pdf, "_swc")
@@ -111,9 +115,7 @@ def image_from_grid(
             sw = 1.0
         img = img / sw
         if correct_pswf:
-            cu = pswf((np.arange(n_u) - n_u // 2) / (n_u // 2))[0][lo_u:lo_u + crop[0]]
-            cv = pswf((np.arange(n_v) - n_v // 2) / (n_v // 2))[0][lo_v:lo_v + crop[1]]
-            img = img / np.outer(cu, cv)
+            img = img / gp.pswf_corr(image_size)
         li, mi = np.meshgrid(np.arange(crop[0]), np.arange(crop[1]), indexing="ij")
         return pd.DataFrame({
             chan: np.full(img.size, key[0], np.int32),
@@ -167,10 +169,6 @@ def image_planes_from_dense(
         joined = partials_df.join(F.broadcast(sumw_df), on=[chan, pol],
                                   how="left")
 
-    if correct_pswf:
-        cu_full = pswf((np.arange(n_u) - n_u // 2) / (n_u // 2))[0]
-        cv_full = pswf((np.arange(n_v) - n_v // 2) / (n_v // 2))[0]
-
     def plane(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         g = np.zeros((n_u, n_v), np.complex128)
         for r in pdf.itertuples():
@@ -183,7 +181,7 @@ def image_planes_from_dense(
             a0, a1 = max(0, -u0), min(len(arr), n_u - u0)
             g[u0 + a0:u0 + a1] += arr[a0:a1]
         img = np.fft.fftshift(np.fft.ifft2(np.fft.ifftshift(g)))
-        lo_u, lo_v = n_u // 2 - crop[0] // 2, n_v // 2 - crop[1] // 2
+        lo_u, lo_v = gp.crop_lo(image_size)
         img = img[lo_u:lo_u + crop[0], lo_v:lo_v + crop[1]].real * (n_u * n_v)
         if embedded_sw:
             sw = pdf["sum_w_norm"].sum()
@@ -193,8 +191,7 @@ def image_planes_from_dense(
             sw = 1.0
         img = img / sw
         if correct_pswf:
-            img = img / np.outer(cu_full[lo_u:lo_u + crop[0]],
-                                 cv_full[lo_v:lo_v + crop[1]])
+            img = img / gp.pswf_corr(image_size)
         return pd.DataFrame({chan: [key[0]], pol: [key[1]],
                              out: [img.ravel()]})
 
@@ -256,13 +253,6 @@ def make_grid(vis_df: DataFrame, gp: GridParms, *,
                              **cols)
 
 
-# Padded-grid cropping convention: every image consumer here slices the
-# centered (image_size) window out of the padded (n_u, n_v) plane with
-# lo = n_pad//2 - crop//2 — the reference's ``_remove_padding``
-# (ngcasa/imaging/_imaging_utils/_remove_padding.py:20-32), inlined at
-# each FFT consumer because the plane is already in numpy at that point.
-
-
 def make_image_and_psf(vis_df: DataFrame, gp: GridParms, *,
                        image_size: tuple[int, int] | None = None,
                        weight: str = "imaging_weight",
@@ -272,20 +262,22 @@ def make_image_and_psf(vis_df: DataFrame, gp: GridParms, *,
 
     A CLEAN setup needs both; gridding them separately scans and
     shuffles the visibilities twice and then joins the two cubes per
-    pixel. The fused form adds the weight-sampling (``psf_re``) column
-    to the image gridder's aggregation (grid.py ``with_psf``) and runs
-    both FFTs inside one per-plane task, so no second pass, no
-    image⋈psf join, and the output feeds ``deconvolve_point_clean``
-    directly (pass it as BOTH arguments — the join is skipped for the
-    same DataFrame). Parity with make_image + make_psf is unit-tested,
-    including rows with valid weight but zero/null data: the PSF
-    normalizes by its own ``sum_weight_psf`` (the weight-valid row
-    set), the image by ``sum_weight`` (the data-valid subset), exactly
-    as the separate passes do.
+    pixel. This path always runs the kernel scatter
+    (``grid._image_psf_grid``, whatever ``variant`` the separate passes
+    use): each task grids the image, the weight-sampling PSF and both
+    normalizers of its partition in numpy, one plane at a time, and
+    emits its touched cells; those cross ONE exchange, by plane, are
+    summed per cell there, and the per-plane kernel below runs both
+    FFTs — a plane task holds at most n_u·n_v cells. No tap explode, no
+    second pass, no image⋈psf join, and the output feeds
+    ``deconvolve_point_clean`` directly (pass it as BOTH arguments — the
+    join is skipped for the same DataFrame). Parity with make_image +
+    make_psf is unit-tested, including rows with valid weight but
+    zero/null data: the PSF normalizes by its own ``sum_weight_psf``
+    (the weight-valid row set), the image by ``sum_weight`` (the
+    data-valid subset), exactly as the separate passes do.
     """
-    grid, _sumw = grid_visibilities(vis_df, gp, weight=weight,
-                                    variant="explode", with_psf=True,
-                                    fuse_sumw=True, **cols)
+    grid = _image_psf_grid(vis_df, gp, weight=weight, **cols)
     n_u, n_v = gp.n_u, gp.n_v
     crop = image_size or (n_u, n_v)
     chan, pol = cols.get("chan", "chan"), cols.get("pol", "pol")
@@ -297,24 +289,19 @@ def make_image_and_psf(vis_df: DataFrame, gp: GridParms, *,
         T.StructField("image", T.DoubleType()),
         T.StructField("psf", T.DoubleType()),
     ])
-    # no sumw broadcast join: the fused grid carries the per-cell
-    # normalizer partials (_swc / _swpc) and the plane kernel sums them
-    joined = grid
 
     def plane(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         ui = pdf["u_idx"].to_numpy(int)
         vi = pdf["v_idx"].to_numpy(int)
 
         def _sw(col: str) -> float:
-            v = _embedded_sumw(pdf, col)
-            return 1.0 if (v is None or pd.isna(v) or v == 0) else v
+            # a NaN partial makes the plane's normalizer NaN (→ 1.0), as
+            # Spark's sum does on the separate passes
+            v = float(pdf[col].sum(skipna=False))
+            return 1.0 if (pd.isna(v) or v == 0) else v
 
-        lo_u, lo_v = n_u // 2 - crop[0] // 2, n_v // 2 - crop[1] // 2
-        cu = pswf((np.arange(n_u) - n_u // 2)
-                  / (n_u // 2))[0][lo_u:lo_u + crop[0]]
-        cv = pswf((np.arange(n_v) - n_v // 2)
-                  / (n_v // 2))[0][lo_v:lo_v + crop[1]]
-        corr = np.outer(cu, cv)
+        lo_u, lo_v = gp.crop_lo(image_size)
+        corr = gp.pswf_corr(image_size)
         outs = []
         for re_col, im_col, sw in (
                 ("grid_re", "grid_im", _sw("_swc")),
@@ -339,7 +326,7 @@ def make_image_and_psf(vis_df: DataFrame, gp: GridParms, *,
             "psf": outs[1].ravel(),
         })
 
-    return joined.groupBy(chan, pol).applyInPandas(plane, schema)
+    return grid.groupBy(chan, pol).applyInPandas(plane, schema)
 
 
 def make_psf(vis_df: DataFrame, gp: GridParms, *,

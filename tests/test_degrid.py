@@ -319,3 +319,146 @@ def test_degrid_kernel_payload_lossless_nullable_bigint(spark):
     assert len(got) == n
     for i in range(n):
         assert got[i] == big[i], (i, got[i], big[i])
+
+
+def test_predict_modelvis_cropped_model_frame(spark):
+    """A CLEAN model in a cropped image frame (``image_size``, pixel
+    (0, 0) at padded index n//2 − crop//2) predicts the same
+    visibilities as the same sky in the full frame — on the fused
+    kernel path and on the precise two-step path. A 2 Jy source at the
+    phase centre predicts amplitude 2 at phase 0."""
+    rng = np.random.default_rng(5)
+    n = 60
+    vis = spark.createDataFrame(pd.DataFrame({
+        "row_id": np.arange(n),
+        "u": rng.uniform(-30, 30, n), "v": rng.uniform(-30, 30, n),
+        "freq": np.full(n, 1.0e9), "chan": np.zeros(n, np.int32),
+        "pol": np.zeros(n, np.int32),
+    }))
+    schema = "chan int, pol int, l_idx int, m_idx int, model double"
+    full = spark.createDataFrame([(0, 0, 16, 16, 2.0)], schema)
+    crop = spark.createDataFrame([(0, 0, 8, 8, 2.0)], schema)
+    for kw in ({}, {"precise": True}):
+        a = predict_modelvis_image(full, vis, GP, **kw).toPandas() \
+            .sort_values("row_id").reset_index(drop=True)
+        b = predict_modelvis_image(crop, vis, GP, image_size=(16, 16),
+                                   **kw).toPandas() \
+            .sort_values("row_id").reset_index(drop=True)
+        ok = ~a.model_re.isna()
+        assert ok.sum() > 30 and (b.model_re.isna() == ~ok).all()
+        np.testing.assert_array_equal(a.model_re[ok], b.model_re[ok])
+        np.testing.assert_array_equal(a.model_im[ok], b.model_im[ok])
+        np.testing.assert_allclose(np.hypot(b.model_re[ok], b.model_im[ok]),
+                                   2.0, rtol=0.05)
+        phase = np.degrees(np.arctan2(b.model_im[ok], b.model_re[ok]))
+        assert np.abs(phase).max() < 1e-6
+
+
+@pytest.mark.parametrize("slab_w,salt_probe", [(8, True), (64, False)])
+def test_predict_fused_matches_two_step_bitwise(spark, slab_w, salt_probe):
+    """The fused predict (forward FFT inside the slab kernel) equals
+    model_image_to_grid → degrid_visibilities(variant="kernel") BIT FOR
+    BIT: multi-plane model with zero, NaN and NULL pixels (a NaN or NULL
+    pixel poisons its plane's FFT, so the |g| > 0 cell rule drops every
+    cell and that plane predicts 0), slab_w=8 halo crossings, a
+    non-empty hot-slab salt map, out-of-bounds rows (NULL models) and a
+    nullable int64 payload past 2^53 passed through unchanged."""
+    import pyspark.sql.types as T
+
+    from cngi_prototype_spark.plans import explain_formatted
+
+    rng = np.random.default_rng(17)
+    pix = []
+    for c in range(2):
+        for p in range(2):
+            cells = rng.choice(32 * 32, 10, replace=False)
+            for i, cell in enumerate(cells):
+                val = float(rng.normal())
+                if i == 0:
+                    val = 0.0
+                elif i == 1 and (c, p) == (1, 0):
+                    val = float("nan")
+                elif i == 1 and (c, p) == (1, 1):
+                    val = None
+                pix.append((c, p, int(cell // 32), int(cell % 32), val))
+    model = spark.createDataFrame(
+        pix, "chan int, pol int, l_idx int, m_idx int, model double")
+    n = 600
+    # half centrally condensed (hot central slabs), half wide (±6000 m:
+    # a real share of out-of-bounds rows)
+    u = np.concatenate([rng.normal(0, 700, n // 2),
+                        rng.uniform(-6e3, 6e3, n // 2)])
+    v = np.concatenate([rng.normal(0, 700, n // 2),
+                        rng.uniform(-6e3, 6e3, n // 2)])
+    big = [None if i % 7 == 0 else (1 << 60) + i * 1_000_003 + 1
+           for i in range(n)]
+    # the condensed half all in plane (0, 0): its central slabs are
+    # past a core's fair share
+    plane = np.where(np.arange(n)[:, None] < n // 2, 0,
+                     rng.integers(0, 2, (n, 2)))
+    rows = [(i, float(u[i]), float(v[i]), 1.0e9, int(plane[i, 0]),
+             int(plane[i, 1]), big[i]) for i in range(n)]
+    vdf = spark.createDataFrame(rows, T.StructType([
+        T.StructField("row_id", T.LongType(), False),
+        T.StructField("u", T.DoubleType()), T.StructField("v", T.DoubleType()),
+        T.StructField("freq", T.DoubleType()),
+        T.StructField("chan", T.IntegerType()),
+        T.StructField("pol", T.IntegerType()),
+        T.StructField("big_tag", T.LongType(), True),
+    ]))
+    fused_df = predict_modelvis_image(model, vdf, GP, slab_w=slab_w,
+                                      salt_probe=salt_probe)
+    # the hot-slab valve fired: its salt map rides a broadcast join
+    assert ("BroadcastHashJoin" in explain_formatted(fused_df)) == salt_probe
+    two_step = degrid_visibilities(vdf, model_image_to_grid(model, GP), GP,
+                                   variant="kernel", slab_w=slab_w,
+                                   salt_probe=salt_probe)
+    a = fused_df.toPandas().sort_values("row_id").reset_index(drop=True)
+    b = two_step.toPandas().sort_values("row_id").reset_index(drop=True)
+    assert len(a) == len(b) == n
+    assert list(a.columns) == list(b.columns)
+    assert dict(fused_df.dtypes)["big_tag"] == "bigint"
+    got = {r["row_id"]: r["big_tag"] for r in fused_df.collect()}
+    assert all(got[i] == big[i] for i in range(n))
+    for col in ("model_re", "model_im"):
+        x, y = a[col].to_numpy(), b[col].to_numpy()
+        assert (np.isnan(x) == np.isnan(y)).all()
+        assert (x.view(np.int64) == y.view(np.int64)).all(), col
+    oob = a.model_re.isna()
+    assert oob.sum() > 50 and (~oob).sum() > 200
+    # the NaN / NULL-pixel planes predict exact zeros, the others not
+    poisoned = (a.chan == 1) & ~oob
+    assert (a.model_re[poisoned] == 0).all()
+    assert (a.model_re[(a.chan == 0) & ~oob] != 0).all()
+
+
+def test_model_side_one_fft_per_plane_per_task(spark, monkeypatch):
+    """The fused predict's fill transforms a plane once and reuses it
+    for the following slab groups of that plane (a task's cogroup
+    groups arrive sorted by (chan, pol, slab)); a new plane replaces it."""
+    import pyarrow as pa
+
+    from cngi_prototype_spark.imaging.degrid import _model_side
+
+    model = spark.createDataFrame(
+        [(0, 0, 16, 16, 2.0)],
+        "chan int, pol int, l_idx int, m_idx int, model double")
+    _, fill = _model_side(model, GP, 8, "chan", "pol")
+    calls = []
+    fft2 = np.fft.fft2
+    monkeypatch.setattr(np.fft, "fft2",
+                        lambda a: calls.append(1) or fft2(a))
+
+    def tab(chan: int, val: float):
+        return pa.table({"chan": [chan], "pol": [0], "_l": [16],
+                         "_m": [16], "_val": [val]})
+
+    a = fill(0, 14, tab(0, 2.0))
+    fill(8, 14, tab(0, 2.0))
+    fill(16, 14, tab(0, 2.0))
+    assert len(calls) == 1
+    b = fill(0, 14, tab(1, 3.0))
+    assert len(calls) == 2
+    np.testing.assert_allclose(b, 1.5 * a, rtol=1e-12, atol=1e-12)
+    fill(0, 14, tab(0, 2.0))
+    assert len(calls) == 3

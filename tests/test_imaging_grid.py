@@ -220,18 +220,52 @@ def test_fused_sumw_matches_standalone(spark, vis_pdf):
 
 
 def test_fused_sumw_with_psf_matches_standalone(spark, vis_pdf):
-    """r14: the with_psf fused-gridding path under ``fuse_sumw=True``
-    keeps sum_weight AND sum_weight_psf (weight-valid row set) right."""
-    df = spark.createDataFrame(vis_pdf)
-    g0, s0 = grid_visibilities(df, GP, variant="explode", with_psf=True)
-    g1, s1 = grid_visibilities(df, GP, variant="explode", with_psf=True,
-                               fuse_sumw=True)
-    assert g1.columns == g0.columns + ["_swc", "_swpc"]
-    a = {(r.chan, r.pol): (r.sum_weight, r.sum_weight_psf)
-         for r in s0.toPandas().itertuples()}
-    b = {(r.chan, r.pol): (r.sum_weight, r.sum_weight_psf)
-         for r in s1.toPandas().itertuples()}
-    assert set(a) == set(b)
-    for k in a:
-        assert a[k][0] == pytest.approx(b[k][0], rel=1e-12)
-        assert a[k][1] == pytest.approx(b[k][1], rel=1e-12)
+    """The fused image + PSF grid of make_image_and_psf (kernel
+    scatter): its image cells match the plain (explode) image gridder,
+    its psf_re cells the PSF-mode (``re=None``) gridder, and its per-task
+    normalizer partials sum to sum_weight (data-valid rows) and the
+    PSF's sum_weight (every weight-valid row). The input is split over
+    many tasks, so every plane's partials come from several of them —
+    also on a 512² grid, where each task's planes are sparse enough for
+    the sorted-cell scatter (48×40 takes the dense one) — and the cell
+    sum leaves one row per cell."""
+    from cngi_prototype_spark.imaging.grid import _image_psf_grid
+
+    key = ["chan", "pol", "u_idx", "v_idx"]
+    gp512 = GridParms(n_u=512, n_v=512, cell_u=GP.cell_u,
+                      cell_v=GP.cell_v)
+    for gp, nparts in ((GP, 5), (gp512, 16)):
+        df = spark.createDataFrame(vis_pdf).repartition(nparts)
+        fused = _image_psf_grid(df, gp).toPandas()
+        assert list(fused.columns) == key + [
+            "grid_re", "grid_im", "psf_re", "_swc", "_swpc"]
+        assert not fused.duplicated(key).any()
+        assert fused.groupby(["chan", "pol"]).size().max() <= gp.n_u * gp.n_v
+        fused = fused.set_index(key)
+        # row 6 has NaN data -> NaN weighted data, still "valid"; row 5
+        # zero weight is in neither set
+        _, s_img = grid_visibilities(df, gp, variant="explode")
+        _, s_psf = grid_visibilities(df, gp, variant="explode", re=None,
+                                     im=None)
+        tot = fused.groupby(level=["chan", "pol"])[["_swc", "_swpc"]].sum()
+        for r in s_img.toPandas().itertuples():
+            assert tot.loc[(r.chan, r.pol), "_swc"] == pytest.approx(
+                r.sum_weight, rel=1e-12)
+        for r in s_psf.toPandas().itertuples():
+            assert tot.loc[(r.chan, r.pol), "_swpc"] == pytest.approx(
+                r.sum_weight, rel=1e-12)
+        img = grid_visibilities(df, gp, variant="explode")[0].toPandas() \
+            .set_index(key)
+        psf = grid_visibilities(df, gp, variant="explode", re=None,
+                                im=None)[0].toPandas().set_index(key)
+        # fused touched cells = image cells ∪ psf cells; the extra cells
+        # carry exact zeros in the image columns
+        assert set(fused.index) == set(img.index) | set(psf.index)
+        im = img.reindex(fused.index, fill_value=0.0)
+        ps = psf.reindex(fused.index, fill_value=0.0)
+        np.testing.assert_allclose(fused.grid_re, im.grid_re, rtol=0,
+                                   atol=1e-9)
+        np.testing.assert_allclose(fused.grid_im, im.grid_im, rtol=0,
+                                   atol=1e-9)
+        np.testing.assert_allclose(fused.psf_re, ps.grid_re, rtol=0,
+                                   atol=1e-9)

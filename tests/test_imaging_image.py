@@ -160,13 +160,17 @@ def test_make_image_and_psf_matches_separate_passes(spark):
         "data_im", F.when(F.isnan("data_im"), F.lit(None))
         .otherwise(F.col("data_im"))).persist()
     key = ["chan", "pol", "l_idx", "m_idx"]
-    fused = make_image_and_psf(vis, gp, image_size=(24, 24)) \
-        .toPandas().sort_values(key).reset_index(drop=True)
     img = make_image(vis, gp, image_size=(24, 24)) \
         .toPandas().sort_values(key).reset_index(drop=True)
     psf = make_psf(vis, gp, image_size=(24, 24)) \
         .toPandas().sort_values(key).reset_index(drop=True)
+    # the fused path grids per task; a 7-way repartition splits every
+    # plane's partial grids (and normalizer partials) across tasks,
+    # which the plane kernel must sum
+    for src in (vis, vis.repartition(7)):
+        fused = make_image_and_psf(src, gp, image_size=(24, 24)) \
+            .toPandas().sort_values(key).reset_index(drop=True)
+        assert len(fused) == len(img) == len(psf) > 0
+        assert np.allclose(fused.image, img.image, rtol=0, atol=1e-9)
+        assert np.allclose(fused.psf, psf.psf, rtol=0, atol=1e-9)
     vis.unpersist()
-    assert len(fused) == len(img) == len(psf) > 0
-    assert np.allclose(fused.image, img.image, rtol=0, atol=1e-9)
-    assert np.allclose(fused.psf, psf.psf, rtol=0, atol=1e-9)

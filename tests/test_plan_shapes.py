@@ -535,7 +535,7 @@ def test_minhash_lsh_candidates_matches_join_form(spark):
 
 
 def test_deconvolver_fused_input_single_grid_build(spark):
-    """r14: same-object image/psf input skips the per-pixel self-join
+    """Same-object image/psf input skips the per-pixel self-join
     in mtclean and fastresolve (deconvolve_point_clean already did) —
     one gridding subtree, no join."""
     from cngi_prototype_spark.imaging.fastresolve import (
@@ -550,15 +550,16 @@ def test_deconvolver_fused_input_single_grid_build(spark):
     for out in (deconvolve_fast_resolve(fused, fused),
                 deconvolve_multiterm_clean(fused, fused, niter=2)):
         plan = explain_formatted(out)
-        # the sum-of-weights LeftOuter broadcast join inside
-        # make_image_and_psf legitimately remains — what must be gone
-        # is the per-pixel image⋈psf INNER self-join (and with it the
-        # duplicated gridding subtree)
+        # what must be gone is the per-pixel image⋈psf INNER self-join
+        # (and with it the duplicated gridding subtree)
         assert not re.search(
             r"(SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin) Inner",
             plan)
+        # one scatter (MapInPandas) feeding the plane FFT kernel, then
+        # the solver — each exactly once
+        assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
         assert len(re.findall(r"\(\d+\) FlatMapGroupsInPandas",
-                              plan)) == 2  # grid + solver, once each
+                              plan)) == 2  # plane FFT + solver
 
 
 def test_mosaic_phase_gradient_map_literal(spark):
@@ -616,3 +617,65 @@ def test_fused_image_single_scan_no_sumw_join(spark):
         assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
         assert not re.search(r"\(\d+\) (SortMergeJoin|BroadcastHashJoin"
                              r"|ShuffledHashJoin)\b", plan)
+
+
+def _events_vis(spark):
+    from pyspark.sql import functions as F
+
+    ev = spark.read.parquet(f"{SF}/events.parquet")
+    return ev.select(
+        F.col("event_id").alias("row_id"),
+        ((F.col("event_id") % 1000) / 2.0 - 250.0).alias("u"),
+        ((F.col("user_id") % 1000) / 2.0 - 250.0).alias("v"),
+        F.lit(1.0e9).alias("freq"),
+        F.lit(0).alias("chan"), (F.col("user_id") % 2).cast("int").alias("pol"),
+        (F.col("value") / 100.0).alias("data_re"),
+        F.lit(0.0).alias("data_im"),
+        F.lit(1.0).alias("weight"))
+
+
+def test_make_image_and_psf_kernel_scatter_plan(spark):
+    """make_image_and_psf grids on the partition-local numpy scatter:
+    no tap-sequence Generate, ONE visibility scan, and ONE exchange —
+    the per-task cells shuffled by plane, summed per cell and read by
+    the FFT kernel without a second exchange (no sum-of-weights branch
+    or join)."""
+    from cngi_prototype_spark.imaging.grid import GridParms
+    from cngi_prototype_spark.imaging.image import make_image_and_psf
+    from cngi_prototype_spark.plans import explain_formatted
+
+    gp = GridParms(n_u=32, n_v=32, cell_u=2.5e-5, cell_v=2.5e-5)
+    df = make_image_and_psf(_events_vis(spark), gp, image_size=(16, 16),
+                            weight="weight")
+    plan = explain_formatted(df)
+    assert not re.search(r"\(\d+\) Generate", plan)
+    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1
+    assert count_exchanges(df) == 1
+    assert len(re.findall(r"\(\d+\) MapInPandas", plan)) == 1
+    assert len(re.findall(r"\(\d+\) FlatMapGroupsInPandas", plan)) == 1
+    # the cell sum: one partial + final aggregate pair, both after the
+    # exchange (the scatter already merged each task's taps per cell)
+    assert len(re.findall(r"\(\d+\) HashAggregate", plan)) == 2
+
+
+def test_predict_modelvis_kernel_single_cogroup_plan(spark):
+    """The default predict_modelvis_image forward-FFTs the model inside
+    the degrid slab kernel: ONE cogroup, and no FlatMapGroupsInPandas
+    (model_image_to_grid's all-cells stage is gone). The precise path
+    keeps the two-step model grid + explode degrid."""
+    from cngi_prototype_spark.imaging.degrid import predict_modelvis_image
+    from cngi_prototype_spark.imaging.grid import GridParms
+    from cngi_prototype_spark.plans import explain_formatted
+
+    gp = GridParms(n_u=32, n_v=32, cell_u=2.5e-5, cell_v=2.5e-5)
+    model = spark.createDataFrame(
+        [(0, p, 16, 16, 2.0) for p in range(2)],
+        "chan int, pol int, l_idx int, m_idx int, model double")
+    vis = _events_vis(spark)
+    plan = explain_formatted(predict_modelvis_image(model, vis, gp))
+    assert len(re.findall(r"\(\d+\) FlatMapCoGroupsInArrow", plan)) == 1
+    assert "FlatMapGroupsInPandas" not in plan
+    precise = explain_formatted(
+        predict_modelvis_image(model, vis, gp, precise=True))
+    assert "FlatMapGroupsInPandas" in precise
+    assert "FlatMapCoGroups" not in precise
